@@ -560,7 +560,7 @@ def main() -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
     # Per-project fan-out (the scale path: one fast-import per project
-    # inside executors; driver cost is one small aggregate).
+    # inside executors; the Spark driver receives only per-project counts).
     tmp = tempfile.mkdtemp(prefix="bench_git_fan_")
     try:
         from pyspark.sql import Window

@@ -141,6 +141,15 @@ def key_from_path(path: Column) -> Column:
     return F.regexp_extract(path, r"([^/]+)\.yaml$", 1)
 
 
+def issue_file_path(project_key: Column, key: Column) -> Column:
+    """Inverse of key_from_path: `projects/{pk}/issues/{key}.yaml`
+    (pkg/schema/yaml.go:118-122) — the one spelling shared by the sync
+    state and the commit log."""
+    return F.concat(
+        F.lit("projects/"), project_key, F.lit("/issues/"), key, F.lit(".yaml")
+    )
+
+
 # --- F12: deterministic job id (pkg/jobs/job_id.go:26-41) ------------------
 
 def job_id(job_type: Column, ts: Column, seed: Column) -> Column:

@@ -745,8 +745,10 @@ def symlink_rows(edges: DataFrame) -> DataFrame:
       subtask  projects/{pk}/relationships/subtasks/{src}/{dst}→ ../../../issues/{dst}.yaml
       typed    projects/{pk}/relationships/{type}/{direction}/{src}
                                                                → ../../../issues/{dst}.yaml
-    Narrow projection over the edge frame; the git sink renders these as
-    mode-120000 entries (sinks_git.materialize_symlinks_fan_out)."""
+    Narrow projection over the edge frame; the git sink writes each
+    project's rows as one commit of mode-120000 entries through its one
+    per-project writer and returns the link counts it wrote
+    (sinks_git.materialize_symlinks_fan_out)."""
     base = F.concat_ws(
         "/", F.lit("projects"), F.col("project_key"), F.lit("relationships")
     )

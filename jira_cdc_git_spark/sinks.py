@@ -17,7 +17,7 @@ Reference behaviors re-expressed:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jira_cdc_git_spark.functions import scalar as SC
@@ -109,8 +109,10 @@ def write_edges(edges: DataFrame, path: str, mode: str = "overwrite") -> None:
     edges.write.mode(mode).partitionBy("link_type", "direction").parquet(path)
 
 
-def commit_log_rows(issues: DataFrame) -> DataFrame:
-    """S8/F6/F7 — one commit row per synced issue."""
+def commit_log_rows(issues: DataFrame, *extra: Column | str) -> DataFrame:
+    """S8/F6/F7 — one commit row per synced issue (per issue VERSION: k
+    versions of a key give k rows). ``extra`` columns ride along in the
+    same projection (the git sink's YAML fields)."""
     return issues.select(
         F.sha2(
             F.concat_ws("|", F.col("key"), F.col("updated").cast("string")), 256
@@ -131,13 +133,10 @@ def commit_log_rows(issues: DataFrame) -> DataFrame:
             F.col("status.name"),
         ).alias("body"),
         F.col("updated").alias("commit_ts"),
-        F.concat(
-            F.lit("projects/"),
-            F.col("project_key"),
-            F.lit("/issues/"),
-            F.col("key"),
-            F.lit(".yaml"),
-        ).alias("file_path"),
+        SC.issue_file_path(F.col("project_key"), F.col("key")).alias(
+            "file_path"
+        ),
+        *extra,
     )
 
 

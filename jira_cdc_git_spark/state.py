@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jira_cdc_git_spark import schemas
+from jira_cdc_git_spark.functions import scalar as SC
 
 HISTORY_CAP = 50  # pkg/state/manager.go:22
 
@@ -81,13 +82,7 @@ def merge_updates(synced: DataFrame) -> DataFrame:
         F.sha2(
             F.concat_ws("|", "key", "summary", F.col("status.name")), 256
         ).alias("u_checksum"),
-        F.concat(
-            F.lit("projects/"),
-            F.col("project_key"),
-            F.lit("/issues/"),
-            F.col("key"),
-            F.lit(".yaml"),
-        ).alias("u_path"),
+        SC.issue_file_path(F.col("project_key"), F.col("key")).alias("u_path"),
     )
 
 

@@ -27,7 +27,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jira_cdc_git_spark import sinks
+from jira_cdc_git_spark import sinks, sinks_git
+from jira_cdc_git_spark.operators.jira import link_edges_frame
 from jira_cdc_git_spark.state import SyncStateStore
 
 
@@ -72,8 +73,13 @@ def incremental_sync_batch(
     the full per-batch write set of the reference's sync loop.
 
     git_repos_root: when set, the change set also materializes as real git
-    commits, one repo per project (S8 fan-out, sinks_git.materialize_fan_out)
-    — the reference's complete output contract in one batch body.
+    commits, one repo per project: one commit per synced issue version
+    (sinks_git.materialize_fan_out) plus one symlink-tree commit per touched
+    project (sinks_git.materialize_symlinks_fan_out), over the same edge
+    frame the edge sink writes — the reference's complete output contract
+    in one batch body. Each pass is one Spark action: a per-project
+    partition writer that runs one ``git fast-import`` per project repo and
+    returns the counts it wrote.
     """
     now = now or datetime.now(timezone.utc).replace(tzinfo=None)
     start = now
@@ -107,27 +113,17 @@ def incremental_sync_batch(
         issue_cols = changes.drop("change_type")
         sinks.append_issue_deltas(issue_cols, f"{out_root}/issues")
         sinks.append_commit_log(issue_cols, f"{out_root}/commit_log")
-        if edges_dir is not None:
-            from jira_cdc_git_spark.operators.jira import link_edges_frame
-
-            sinks.write_edges(
-                link_edges_frame(issue_cols), edges_dir, mode="append"
-            )
-        if git_repos_root is not None:
-            from jira_cdc_git_spark.operators.jira import link_edges_frame
-            from jira_cdc_git_spark.sinks_git import (
-                materialize_fan_out,
-                materialize_symlinks_fan_out,
-            )
-
-            materialize_fan_out(issue_cols, git_repos_root)
-            # the reference links every synced issue's relationships
-            # right after writing it (incremental.go processIssue →
-            # links.CreateRelationshipLinks) — one symlink commit per
-            # project per batch carries the change set's edges
-            materialize_symlinks_fan_out(
-                link_edges_frame(issue_cols), git_repos_root
-            )
+        if edges_dir is not None or git_repos_root is not None:
+            edges = link_edges_frame(issue_cols)
+            if edges_dir is not None:
+                sinks.write_edges(edges, edges_dir, mode="append")
+            if git_repos_root is not None:
+                sinks_git.materialize_fan_out(issue_cols, git_repos_root)
+                # the reference links every synced issue's relationships
+                # right after writing it (incremental.go processIssue →
+                # links.CreateRelationshipLinks) — one symlink commit per
+                # project per batch carries the change set's edges
+                sinks_git.materialize_symlinks_fan_out(edges, git_repos_root)
         store.merge(spark, issue_cols, now)
         store.record_operation(
             spark, "incremental", "completed", start, now, counts

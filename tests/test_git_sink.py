@@ -186,3 +186,67 @@ def test_symlink_tree_materializes(spark, sf_dir, tmp_path):
     assert os.path.islink(link)
     assert os.readlink(link) == f"../../issues/{some['dst_key']}.yaml"
     df.unpersist()
+
+
+K_VERSIONS = 3
+
+
+@pytest.fixture(scope="module")
+def multiversion(spark, sf_dir):
+    """A batch holding K_VERSIONS versions of one key, each with a distinct
+    ``updated``, plus 19 other issues — what a poll returns when one issue
+    was edited several times between polls."""
+    from functools import reduce
+
+    base = FX.issues(spark, sf_dir).orderBy("key").limit(20)
+    first = base.first()
+    key, project = first["key"], first["project_key"]
+    one = base.filter(F.col("key") == key)
+    later = [
+        one.withColumn("updated", F.expr(f"updated + INTERVAL {h} HOURS"))
+        for h in range(1, K_VERSIONS)
+    ]
+    df = reduce(lambda a, b: a.unionByName(b), later, base).cache()
+    newest = df.filter(F.col("key") == key).agg(F.max("updated")).first()[0]
+    yield df, key, project, newest
+    df.unpersist()
+
+
+def _assert_one_commit_per_version(repo, key, project, newest, total):
+    import os
+
+    import yaml
+
+    subjects = sinks_git.git_log_subjects(repo)
+    assert len(subjects) == total
+    assert sum(f" {key} - " in s for s in subjects) == K_VERSIONS
+    path = f"projects/{project}/issues/{key}.yaml"
+    touched = subprocess.run(
+        ["git", "-C", repo, "log", "--format=%H", "--", path],
+        check=True, capture_output=True, text=True,
+    ).stdout.split()
+    assert len(touched) == K_VERSIONS
+    with open(os.path.join(repo, path)) as f:
+        assert str(yaml.safe_load(f)["updated"]) == str(newest)
+
+
+def test_fast_import_one_commit_per_version(multiversion, tmp_path):
+    """k versions of one key in a batch give exactly k commits (not k²),
+    and the file at HEAD is the newest version."""
+    df, key, project, newest = multiversion
+    repo = str(tmp_path / "repo")
+    n = sinks_git.materialize_fast_import(df, repo)
+    assert n == 20 + K_VERSIONS - 1
+    _assert_one_commit_per_version(repo, key, project, newest, n)
+
+
+def test_fan_out_one_commit_per_version(multiversion, tmp_path):
+    import os
+
+    df, key, project, newest = multiversion
+    root = str(tmp_path / "repos")
+    counts = sinks_git.materialize_fan_out(df, root)
+    assert sum(counts.values()) == 20 + K_VERSIONS - 1
+    _assert_one_commit_per_version(
+        os.path.join(root, project), key, project, newest, counts[project]
+    )

@@ -1050,3 +1050,15 @@ def test_kn_split_window_runs_on_histogram_not_corpus(spark, sf_dir):
     # is partitioned — never a global single-task sort
     assert plan.count("Window") >= 1
     assert "PartitionBy: [lang" in plan or "partitionBy" in plan.lower() or "hashpartitioning(lang" in plan
+
+
+def test_git_commit_frame_is_join_free(spark, sf_dir):
+    # the git sink's commit frame is one projection of the issue row: a
+    # join back to the issues on key alone turned k versions of a key
+    # into k² commits
+    from jira_cdc_git_spark import fixtures as FX
+    from jira_cdc_git_spark import sinks_git
+
+    src = FX.issues(spark, sf_dir)
+    issues = spark.createDataFrame(src.limit(5).collect(), src.schema)
+    assert "Join" not in _plan(sinks_git._commit_frame(issues))
